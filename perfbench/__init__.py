@@ -1,0 +1,1 @@
+"""spinelink benchmark: see README.md in this directory."""
