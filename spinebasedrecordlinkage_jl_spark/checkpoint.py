@@ -99,22 +99,20 @@ def stage_metrics(spine: DataFrame, links: DataFrame) -> dict[str, Any]:
     run_linkage after each checkpoint commit)."""
     from pyspark.sql import functions as F
 
-    by_crit = {
-        str(r["CriteriaId"]): int(r["n"])
-        for r in links.groupBy("CriteriaId").agg({"*": "count"})
-        .withColumnRenamed("count(1)", "n")
-        .collect()
-    }
-    # per-partition lineage: row counts by physical partition at
-    # checkpoint time (= the files just written, one per partition).
-    # The groupBy is map-side only — spark_partition_id needs no shuffle
-    # to count within its own partition.
-    part_rows = {
-        str(r["pid"]): int(r["n"])
-        for r in links.groupBy(F.spark_partition_id().alias("pid"))
+    # one aggregation yields both per-criteria and per-partition counts:
+    # rows per physical partition at checkpoint time (= the files just
+    # written, one per partition) split by CriteriaId. spark_partition_id
+    # is evaluated before the exchange, in the links' own partitions.
+    by_crit: dict[str, int] = {}
+    part_rows: dict[str, int] = {}
+    for r in (
+        links.groupBy(F.spark_partition_id().alias("pid"), "CriteriaId")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
-    }
+    ):
+        crit, pid, n = str(r["CriteriaId"]), str(r["pid"]), int(r["n"])
+        by_crit[crit] = by_crit.get(crit, 0) + n
+        part_rows[pid] = part_rows.get(pid, 0) + n
     n_links = sum(part_rows.values())
     mean = n_links / len(part_rows) if part_rows else 0.0
     skew = (max(part_rows.values()) / mean) if mean else 0.0

@@ -168,6 +168,8 @@ class LinkageConfig:
     # blocks with more DISTINCT match signatures than this are purged
     # from fuzzy edge generation (0 = unlimited; see spine.match_pairs)
     max_block_signatures: int = 10_000
+    # connected-components knobs: they act only on form_entities' global
+    # path (no common exact key, or a block over its block-local cap)
     cc_convergence: str = "checksum"  # "checksum" | "star"
     cc_max_iter: int = 30
 
@@ -188,6 +190,11 @@ class LinkageConfig:
         if "EntityId" not in self.spine_columns:
             # Mirrors runlinkage.jl:49: spine schema must contain EntityId.
             raise ValueError("spine_columns must include EntityId")
+        ids = [c.id for c in self.criteria]
+        if len(set(ids)) != len(ids):
+            # link_table groups candidates by (EventId, CriteriaId): two
+            # criteria under one id would pool their candidate sets
+            raise ValueError(f"duplicate criteria ids: {sorted(ids)}")
         for crit in self.criteria:
             if crit.tablename not in self.tables:
                 raise ValueError(
@@ -317,6 +324,9 @@ def load_config(path: str | Path, check_files: bool = True) -> LinkageConfig:
         output_directory = "..."
         append_to_spine = true
         construct_entityid_from = ["firstname", "lastname", "birthdate"]
+        max_block_signatures = 10000  # optional, 0 = unlimited
+        cc_convergence = "checksum"   # optional; global formation path only
+        cc_max_iter = 30              # optional; global formation path only
         [spine]
         datafile = ""              # empty => start empty
         columns = ["EntityId", "firstname", ...]

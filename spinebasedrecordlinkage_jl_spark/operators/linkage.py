@@ -179,6 +179,11 @@ def link_table(
     """
     if not criteria:
         raise ValueError(f"no criteria for table {tablename}")
+    ids = [c.id for c in criteria]
+    if len(set(ids)) != len(ids):
+        # the selection groups by (EventId, CriteriaId): a shared id
+        # would pool two criteria's candidate sets
+        raise ValueError(f"duplicate criteria ids for table {tablename}: {sorted(ids)}")
     allc = None
     for c in criteria:
         cand = _criteria_candidates(events, spine, c, broadcast_spine).select(

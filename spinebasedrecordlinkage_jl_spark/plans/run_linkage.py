@@ -19,8 +19,18 @@ declarative Spark plan:
 
 The spine is explicitly broadcast into every linkage join; the event
 table is never shuffled during linkage (only the final first-criteria
-window partitions by EventId). Entity formation shuffles once per
-criteria key + the CC rounds.
+window partitions by EventId). Entity formation is one repartition by the
+criteria's common exact key plus one Python pass when they share one,
+else one shuffle per criteria key + the CC rounds.
+
+Each relation consumed more than once is materialized once with
+``localCheckpoint(eager=True)`` and unpersisted when its consumers are
+done: a table's records (its events and the final ``events_<table>``
+sink), the validated, deduplicated events, the spine-probe links and the
+unlinked remainder.
+``localCheckpoint`` keeps blocks on the executors that computed them: it
+is cheap, but not fault tolerant — a lost executor fails the run, which
+then resumes from the last stage checkpoint.
 """
 
 from __future__ import annotations
@@ -141,10 +151,15 @@ def run_linkage(
             links = read_table(spark, last.links_path)
             start_stage = last.stage + 1
 
+    # records materialized by the stages below, reused by the final
+    # events_<table> sinks
+    materialized: dict[str, DataFrame] = {}
     for stage, (tablename, crits) in enumerate(groups):
         if stage < start_stage:
             continue
-        records = records_by_table[tablename]
+        records = materialized[tablename] = records_by_table[tablename].localCheckpoint(
+            eager=True
+        )
         tcfg = config.tables[tablename]
         ev = valid_events(
             records,
@@ -153,13 +168,14 @@ def run_linkage(
             if config.append_to_spine
             else None,
         )
-        ev = dedup_events(ev, order_col=tcfg.primarykey[0])
+        ev = dedup_events(ev, order_col=tcfg.primarykey[0]).localCheckpoint(eager=True)
 
         # 2. link against the frozen spine
         spine_cached = spine.localCheckpoint(eager=True)
         new_links = link_table(
             ev, spine_cached, crits, tablename, broadcast_spine=config.broadcast_spine
-        )
+        ).localCheckpoint(eager=True)
+        stage_frames = [ev, new_links, spine_cached]
 
         # 3. entity formation among unlinked eligible records, then a
         # RE-PROBE of those records against the grown spine — the exact
@@ -170,7 +186,12 @@ def run_linkage(
         # cases (exact ambiguity against the grown spine) stay unlinked
         # exactly as they would there.
         if config.append_to_spine:
-            unlinked = ev.join(new_links.select("EventId"), "EventId", "left_anti")
+            # read by form_entities (its block measure and its solve) and
+            # by the relink
+            unlinked = ev.join(
+                new_links.select("EventId"), "EventId", "left_anti"
+            ).localCheckpoint(eager=True)
+            stage_frames.append(unlinked)
             new_spine, _component_links = form_entities(
                 unlinked,
                 crits,
@@ -186,6 +207,7 @@ def run_linkage(
             spine = spine_cached.unionByName(
                 new_spine, allowMissingColumns=True
             ).localCheckpoint(eager=True)
+            stage_frames.append(spine)
             relink = link_table(
                 unlinked, spine, crits, tablename, broadcast_spine=config.broadcast_spine
             )
@@ -202,6 +224,8 @@ def run_linkage(
         write_table(links, links_path)
         spine = read_table(spark, spine_path)
         links = read_table(spark, links_path)
+        for df in stage_frames:
+            df.unpersist()
         manifest.record(
             StageRecord(
                 stage=stage,
@@ -265,7 +289,9 @@ def run_linkage(
     for tablename, _ in groups:
         tcfg = config.tables[tablename]
         pk = [F.col(c) for c in tcfg.primarykey]
-        events_pk = records_by_table[tablename].select("EventId", *pk).distinct()
-        write_table(events_pk, str(out / f"events_{tablename}"))
+        records = materialized.get(tablename, records_by_table[tablename])
+        write_table(records.select("EventId", *pk).distinct(), str(out / f"events_{tablename}"))
+    for records in materialized.values():
+        records.unpersist()
 
     return LinkageRun(spine=spine, links=links, output_directory=str(outdir), manifest=manifest)

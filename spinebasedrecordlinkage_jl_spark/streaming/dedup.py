@@ -83,6 +83,12 @@ def stream_exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "d
 
     Output: (content_hash, doc_id, text) — exactly one row per distinct
     text ever seen (within the state-timeout horizon).
+
+    Under ``trigger(availableNow=True)`` or ``once``, set
+    ``spark.sql.streaming.noDataMicroBatches.enabled=false`` before
+    ``start()``: the state's processing-time timeout otherwise makes the
+    engine run state-cleanup micro-batches without data, and the query
+    never terminates.
     """
     keyed = docs.select(
         F.md5(F.col(text_col)).alias("content_hash"),

@@ -129,6 +129,12 @@ def stream_link_and_form(
        plan) and the previous in-memory copy unpersisted, so state stays
        one spine snapshot regardless of run length.
 
+    The micro-batch, its spine links and its unlinked remainder are each
+    ``localCheckpoint``-ed once and unpersisted at batch end.
+    ``localCheckpoint`` blocks live on the executors that computed them
+    and are not fault tolerant: a lost executor fails the micro-batch and
+    the query; a restart replays that batch from ``checkpoint_dir``.
+
     Ordering semantics: within a batch, cross-record transitivity is the
     batch engine's deterministic connected components; ACROSS batches,
     arrival order decides (a fuzzy near-dup arriving after its twin's
@@ -168,11 +174,14 @@ def stream_link_and_form(
             _swap_spine(spine_refresh(), owned=False)
         state["batches_seen"] += 1
         # one materialization of the micro-batch: linked + anti-join +
-        # entity formation all read it (same pattern as the batch plan)
+        # entity formation all read it (same pattern as the batch plan);
+        # likewise the links, read by the anti-join and the links sink
         batch_c = batch.localCheckpoint(eager=True)
         cur = state["spine"]
-        linked = link_table(batch_c, cur, criteria, tablename)
-        unlinked = batch_c.join(linked.select("EventId"), "EventId", "left_anti")
+        linked = link_table(batch_c, cur, criteria, tablename).localCheckpoint(eager=True)
+        unlinked = batch_c.join(linked.select("EventId"), "EventId", "left_anti").localCheckpoint(
+            eager=True
+        )
         new_spine, self_links = form_entities(
             unlinked,
             criteria,
@@ -188,7 +197,8 @@ def stream_link_and_form(
             new_spine.select(*cur.columns), allowMissingColumns=False
         ).localCheckpoint(eager=True)
         _swap_spine(grown, owned=True)
-        batch_c.unpersist()
+        for df in (batch_c, linked, unlinked):
+            df.unpersist()
 
     writer = records.writeStream.foreachBatch(_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -164,6 +164,12 @@ def stream_neardup_pairs(
     Output: (id_1, id_2, hamming, band_idx) — id_1 < id_2, emitted the
     micro-batch the later document arrives. Pairs agreeing on k bands
     emit k rows (distinct band_idx); dedup downstream if needed.
+
+    Under ``trigger(availableNow=True)`` or ``once``, set
+    ``spark.sql.streaming.noDataMicroBatches.enabled=false`` before
+    ``start()``: the state's processing-time timeout otherwise makes the
+    engine run state-cleanup micro-batches without data, and the query
+    never terminates.
     """
     if bits % band_bits != 0:
         raise ValueError(f"band_bits {band_bits} must divide bits {bits}")

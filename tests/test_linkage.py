@@ -168,3 +168,29 @@ def test_approx_only_criteria_rejected(spark):
     ev = _events(spark, [(1, "j", "s")])
     with pytest.raises(ValueError, match="cross join"):
         criteria_pass(ev, spine, crit)
+
+
+def test_duplicate_criteria_ids_rejected(spark, tmp_path):
+    """link_table groups candidates by (EventId, CriteriaId): criteria
+    sharing an id would pool their candidate sets, so both the config and
+    link_table refuse them."""
+    from spinebasedrecordlinkage_jl_spark.config import LinkageConfig, TableConfig
+
+    crits = [
+        LinkageCriteria(id=1, tablename="t", exactmatch={"firstname": "firstname"}),
+        LinkageCriteria(id=1, tablename="t", exactmatch={"lastname": "lastname"}),
+    ]
+    spine = _spine(spark, [(10, 1, "john", "smith")])
+    with pytest.raises(ValueError, match="duplicate criteria ids"):
+        link_table(_events(spark, [(1, "john", "smith")]), spine, crits, "t")
+    with pytest.raises(ValueError, match="duplicate criteria ids"):
+        LinkageConfig(
+            projectname="p",
+            output_directory=str(tmp_path),
+            spine_datafile=None,
+            spine_columns=("EntityId", "firstname", "lastname"),
+            append_to_spine=False,
+            construct_entityid_from=(),
+            tables={"t": TableConfig(name="t", datafile="", primarykey=("EventId",))},
+            criteria=tuple(crits),
+        )

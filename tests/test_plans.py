@@ -157,13 +157,17 @@ def test_match_pairs_nodes_stay_primitive_long(spark):
         assert isinstance(edges.schema["dst"].dataType, LongType), edges.schema
 
 
-def test_form_entities_spine_has_no_record_window(spark):
+def test_form_entities_spine_has_no_record_window(spark, monkeypatch):
     """The new-spine representative is a two-level min(struct) in
     signature space — a row_number window over the full record relation
     (shuffle + sort of every record on a struct key) must never reappear
     in the spine plan; the per-signature pass must be a partial-
-    aggregatable HashAggregate."""
+    aggregatable HashAggregate. (Global path: the block-local cap is
+    forced to 0.)"""
+    from spinebasedrecordlinkage_jl_spark.operators import spine as spine_mod
     from spinebasedrecordlinkage_jl_spark.operators.spine import form_entities
+
+    monkeypatch.setattr(spine_mod, "_BLOCK_LOCAL_MAX_ROWS", 0)
 
     records = spark.createDataFrame(
         [(1, "c1", "ada", "l"), (2, "c2", "adda", "l"), (3, "c3", "bob", "m")],
@@ -188,3 +192,31 @@ def test_form_entities_spine_has_no_record_window(spark):
     plan = _plan(new_spine)
     assert "Window" not in plan, plan
     assert "HashAggregate" in plan or "ObjectHashAggregate" in plan, plan
+
+
+def test_block_local_spine_plan_is_one_python_map(spark):
+    """Block-local formation: one repartition by the common exact key and
+    ONE Python map stage over it — no Window, no per-group Python call."""
+    from spinebasedrecordlinkage_jl_spark.operators.spine import _block_local_rows
+
+    records = spark.createDataFrame(
+        [(1, "c1", "ada", "l"), (2, "c2", "adda", "l"), (3, "c3", "bob", "m")],
+        "EventId long, conv_id string, firstname string, lastname string",
+    )
+    crits = [
+        LinkageCriteria(
+            id=1,
+            tablename="t",
+            exactmatch={"lastname": "lastname"},
+            approxmatch=(ApproxMatch("firstname", "firstname", "levenshtein", 0.5),),
+        )
+    ]
+    rows = _block_local_rows(
+        records, crits, ["lastname"], ["lastname", "firstname"], ["firstname", "lastname"],
+        "conv_id", 10_000,
+    )
+    plan = rows._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("Exchange hashpartitioning(lastname") == 1, plan

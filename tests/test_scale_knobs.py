@@ -49,9 +49,12 @@ def _cfg(tmp_path, **knobs):
 
 def _spy_spine(monkeypatch):
     """Wrap connected_components + match_pairs to record the kwargs
-    form_entities actually passes down."""
+    form_entities actually passes down. Forces the global formation path
+    (block-local cap 0): FUZZY's criteria share an exact key, and only
+    the global path reaches these two functions."""
     from spinebasedrecordlinkage_jl_spark.operators import spine as spine_mod
 
+    monkeypatch.setattr(spine_mod, "_BLOCK_LOCAL_MAX_ROWS", 0)
     seen = {}
     real_cc = spine_mod.connected_components
     real_mp = spine_mod.match_pairs

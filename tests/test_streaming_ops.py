@@ -37,6 +37,25 @@ def _order_batches(in_dir):
     return next_batch
 
 
+def _run_available_now(spark, start):
+    """Start an ``availableNow`` query via ``start()`` and wait until it
+    finishes by itself. No-data micro-batches are disabled for it: the
+    ``applyInPandasWithState`` operators' processing-time timeouts
+    otherwise keep the query running state-cleanup batches forever. The
+    query is stopped whatever happens, so none outlives its test."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        q = start()
+        try:
+            assert q.awaitTermination(120), "streaming query did not finish"
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_stream_exact_dedup_first_wins(spark, tmp_path):
     in_dir = str(tmp_path / "docs")
     stamp = _order_batches(in_dir)
@@ -52,16 +71,16 @@ def test_stream_exact_dedup_first_wins(spark, tmp_path):
 
     stream = spark.readStream.schema(DOC_SCHEMA).option("maxFilesPerTrigger", 1).parquet(in_dir)
     out_dir = str(tmp_path / "out")
-    q = (
-        stream_exact_dedup(stream)
+    _run_available_now(
+        spark,
+        lambda: stream_exact_dedup(stream)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", str(tmp_path / "ck"))
         .outputMode("append")
         .trigger(availableNow=True)
-        .start()
+        .start(),
     )
-    q.awaitTermination(120)
 
     got = {r["text"]: r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
     # one row per distinct text, lowest doc_id wins
@@ -265,16 +284,16 @@ def test_stream_neardup_pairs_across_batches(spark, tmp_path):
 
     stream = spark.readStream.schema(DOC_SCHEMA).option("maxFilesPerTrigger", 1).parquet(in_dir)
     out_dir = str(tmp_path / "out")
-    q = (
-        stream_neardup_pairs(stream, max_hamming=10)
+    _run_available_now(
+        spark,
+        lambda: stream_neardup_pairs(stream, max_hamming=10)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", str(tmp_path / "ck"))
         .outputMode("append")
         .trigger(availableNow=True)
-        .start()
+        .start(),
     )
-    q.awaitTermination(120)
 
     rows = spark.read.parquet(out_dir).collect()
     pairs = {(r["id_1"], r["id_2"]) for r in rows}
@@ -306,16 +325,16 @@ def test_stream_neardup_hot_bucket_tombstone(spark, tmp_path):
 
     stream = spark.readStream.schema(DOC_SCHEMA).option("maxFilesPerTrigger", 1).parquet(in_dir)
     out_dir = str(tmp_path / "out")
-    q = (
-        stream_neardup_pairs(stream, max_hamming=3, max_band_population=3)
+    _run_available_now(
+        spark,
+        lambda: stream_neardup_pairs(stream, max_hamming=3, max_band_population=3)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", str(tmp_path / "ck"))
         .outputMode("append")
         .trigger(availableNow=True)
-        .start()
+        .start(),
     )
-    q.awaitTermination(120)
 
     rows = spark.read.parquet(out_dir).collect()
     # population hits the cap at doc 4: docs 1-3 stored, pairs for doc 4
