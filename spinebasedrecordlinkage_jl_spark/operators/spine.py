@@ -21,14 +21,16 @@ the remaining divergence to pathological chains.
   every criterion maps to the same-named spine column (``birthdate``
   for the reference goldens and the F1 gate, ``n_turns`` for
   ``q_linkage_full``). Every match edge joins two records with equal,
-  non-null K, so no entity spans two K blocks. One aggregation measures
-  the largest K block; when it holds at most ``_BLOCK_LOCAL_MAX_ROWS``
-  eligible records, the records are repartitioned by K and ONE Python
-  call per partition (``mapInArrow``) contracts signatures, scores each
-  criterion's pairs with the engine's predicate, runs union-find and
-  emits one row per record carrying its representative. The spine rows
-  and membership links are then two projections of that one
-  checkpointed relation: about 5 Spark jobs per call instead of 30-60.
+  non-null K, so no entity spans two K blocks. One aggregation action
+  measures the largest K block in distinct signatures, counts the
+  eligible records and checks that EventIds are unique; when the largest
+  block holds at most ``_BLOCK_LOCAL_MAX_SIGNATURES`` signatures, the
+  records are repartitioned by K and ONE Python call per partition
+  (``mapInArrow``) contracts signatures, scores each criterion's pairs
+  with the engine's predicate, runs union-find and emits one row per
+  record carrying its representative. The spine rows and membership
+  links are then two projections of that one checkpointed relation:
+  about 5 Spark jobs per call instead of 30-60.
 - **Global** (no common key, a block over the cap, or a key column
   type the solver does not compare like Spark): the Spark edge build
   below plus distributed connected components. ``cc_convergence`` and
@@ -58,12 +60,31 @@ from pyspark.sql.types import StringType, StructType
 from ..config import LinkageCriteria
 from ..functions.distances import attach_distance, py_distance
 
-#: Block-local formation solves every exact-key block in one Python task,
-#: scoring pairs in pure Python (quadratic in a block's distinct
-#: signatures, ~10-20 us per pair of 6-7 char names). Above this many eligible
-#: records in the largest block, the global Spark path (JVM scoring,
-#: distributed CC) runs instead; 0 disables the block-local path.
-_BLOCK_LOCAL_MAX_ROWS = 1_000
+#: Block-local formation scores a block's signature pairs in pure Python,
+#: so its cost follows the block's distinct signatures S, not its rows:
+#: at most S^2 pairs per criterion. Timed on one block, local[4], 4 shuffle
+#: partitions, block-local (with its block measure) vs global, median s of
+#: two series: with a criterion keyed on the block key alone and random
+#: 5-8 letter names (~20 us per scored pair), 255 signatures 2.3 vs 4.5;
+#: 302: 3.5 vs 4.3 and 2.7 vs 4.2; 399: 3.4 vs 3.4 and 4.2 vs 3.2; 497:
+#: 6.0 vs 4.6 and 4.7 vs 2.9; 2012: 87 vs 7.6. The cap is the largest size
+#: at which block-local won every series. With the benchmark's criteria on
+#: generator names (finer exact keys, few pairs) block-local stays ahead
+#: far beyond it (20k records / 615 signatures: 0.8 vs 3.3), which the cap
+#: gives up. Above it the global Spark path (JVM scoring, distributed CC)
+#: runs instead; 0 disables the block-local path.
+_BLOCK_LOCAL_MAX_SIGNATURES = 300
+
+#: Records one block-local Python task holds on average: the pass runs on
+#: ``max(spark.sql.shuffle.partitions, ceil(eligible records / this))``
+#: partitions. The solver's Python heap measured ~1.5 KB per record
+#: (tracemalloc, 5k-38k generator records), so ~150 MB per task.
+_BLOCK_LOCAL_TASK_ROWS = 100_000
+
+_DUPLICATE_EVENT_ID = (
+    "form_entities: duplicate EventId; deduplicate records (dedup_events) "
+    "before entity formation"
+)
 
 # ---------------------------------------------------------------------------
 # Graph node ids: 64-bit ids, 128-bit collision SAFETY
@@ -680,12 +701,6 @@ def _solve_blocks(batches, spec: dict):
     n = len(eids)
     if not n:
         return
-    keyed = set(zip(eids, *[cols[c] for c in spec["key_cols"]]))
-    if len(keyed) != n:
-        raise ValueError(
-            "form_entities: duplicate EventId within an exact-key block; "
-            "deduplicate records (dedup_events) before entity formation"
-        )
     order = cols[spec["order_col"]] if spec["order_col"] else None
     rank = (
         eids
@@ -822,12 +837,14 @@ def _block_local_rows(
     carry_cols: list[str],
     order_col: str | None,
     max_block_signatures: int | None,
+    n_parts: int,
 ) -> DataFrame:
-    """The lazy block-local relation: ``eligible`` repartitioned by the
-    common key ``key_cols`` and solved by one :func:`_solve_blocks`
-    call per partition — one row per eligible record with columns
-    ``_ev, _rep_event, _is_rep, _cid`` and the representative's
-    ``carry_cols``."""
+    """The lazy block-local relation: ``eligible`` repartitioned into
+    ``n_parts`` partitions by the common key ``key_cols`` and solved by
+    one :func:`_solve_blocks` call per partition — one row per eligible
+    record with columns ``_ev, _rep_event, _is_rep, _cid`` and the
+    representative's ``carry_cols``. EventIds must be unique (the
+    caller checks): the representative row is marked by EventId."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import BooleanType, IntegerType, StructField
 
@@ -847,7 +864,6 @@ def _block_local_rows(
                 ["EventId"] + ([order_col] if order_col else []) + global_cols + carry_cols
             )
         ),
-        "key_cols": key_cols,
         "order_col": order_col,
         "global_cols": global_cols,
         "carry_cols": carry_cols,
@@ -865,7 +881,6 @@ def _block_local_rows(
         ],
         "schema": to_arrow_schema(out_schema),
     }
-    n_parts = int(eligible.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
         eligible.select(*spec["in_cols"])
         .repartition(n_parts, *key_cols)
@@ -904,13 +919,13 @@ def form_entities(
     - links: every member -> its component's entity, CriteriaId = first
       criterion with complete data (the guaranteed re-link of
       runlinkage.jl:175).
-    - EventIds must be unique. The block-local solver checks each
-      exact-key block inside its own pass (records of different blocks
-      never share an entity); the global path checks the whole input in
-      its concurrent audit job. Both raise ValueError.
+    - EventIds must be unique, or ValueError: checked in the block
+      measure when the criteria share an exact key, otherwise in the
+      global path's concurrent audit job.
 
     The block-local path (module docstring) runs when the criteria share
-    an exact key and its largest block fits ``_BLOCK_LOCAL_MAX_ROWS``;
+    an exact key and its largest block holds at most
+    ``_BLOCK_LOCAL_MAX_SIGNATURES`` distinct signatures;
     ``cc_convergence`` and ``cc_max_iter`` act only on the global path.
     """
     elig_cond = F.lit(False)
@@ -974,9 +989,28 @@ def form_entities(
     )
 
     key_cols = _common_key(criteria, eligible.schema)
-    if key_cols and _BLOCK_LOCAL_MAX_ROWS > 0:
-        largest = eligible.groupBy(*key_cols).count().agg(F.max("count")).first()[0]
-        if (largest or 0) <= _BLOCK_LOCAL_MAX_ROWS:
+    ids_checked = False
+    if key_cols and _BLOCK_LOCAL_MAX_SIGNATURES > 0:
+        # one action: the largest K block in distinct global signatures
+        # (K is part of every signature), the eligible record count, and
+        # the largest EventId multiplicity
+        blocks = (
+            eligible.groupBy(*global_cols)
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .groupBy(*key_cols)
+            .agg(F.count(F.lit(1)).alias("_s"), F.sum("_n").alias("_n"))
+            .agg(F.max("_s").alias("largest"), F.sum("_n").alias("total"))
+        )
+        ids = eligible.groupBy("EventId").count().agg(F.max("count").alias("dup"))
+        stats = blocks.crossJoin(ids).first()
+        if (stats["dup"] or 0) > 1:
+            raise ValueError(_DUPLICATE_EVENT_ID)
+        ids_checked = True
+        if (stats["largest"] or 0) <= _BLOCK_LOCAL_MAX_SIGNATURES:
+            n_parts = max(
+                int(eligible.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+                -(-(stats["total"] or 0) // _BLOCK_LOCAL_TASK_ROWS),
+            )
             rows = _block_local_rows(
                 eligible,
                 criteria,
@@ -985,6 +1019,7 @@ def form_entities(
                 carry_cols,
                 order_col if order_fields else None,
                 max_block_signatures,
+                n_parts,
             ).localCheckpoint(eager=True)
             new_spine = rows.filter(F.col("_is_rep")).select(
                 entity_id.alias("EntityId"),
@@ -1038,16 +1073,14 @@ def form_entities(
 
     def _run_audit() -> None:
         try:
-            # the same thread checks the EventId precondition: singleton
-            # components are keyed by EventId, so a duplicate would fan
-            # its links out across both records' entities
-            if (
+            # the same thread checks the EventId precondition unless the
+            # block measure above did: singleton components are keyed by
+            # EventId, so a duplicate would fan its links out across both
+            # records' entities
+            if not ids_checked and (
                 eligible.groupBy("EventId").count().filter(F.col("count") > 1).limit(1).count()
             ):
-                raise ValueError(
-                    "form_entities: duplicate EventId; deduplicate records "
-                    "(dedup_events) before entity formation"
-                )
+                raise ValueError(_DUPLICATE_EVENT_ID)
             audit["collide"] = frozenset(
                 r["h1"]
                 for r in pop.groupBy("h1")

@@ -84,7 +84,7 @@ def _form(records, crits, cap, monkeypatch, **kw):
 
     with monkeypatch.context() as m:
         if cap is not None:
-            m.setattr(spine_mod, "_BLOCK_LOCAL_MAX_ROWS", cap)
+            m.setattr(spine_mod, "_BLOCK_LOCAL_MAX_SIGNATURES", cap)
         m.setattr(spine_mod, "connected_components", spy_cc)
         out = form_entities(
             records,
@@ -151,15 +151,40 @@ def test_no_common_key_or_oversized_block_takes_global_path(spark, monkeypatch):
     assert spine_mod._common_key(no_key, records.schema) == []
     _, took_global = _form(records, no_key, None, monkeypatch)
     assert took_global
-    # every birthdate block of 30 records holds more than 2
+    # every birthdate block of 30 records holds more than 2 signatures
     _, took_global = _form(records, SHARED_KEY, 2, monkeypatch)
     assert took_global
 
 
+def test_partition_count_grows_with_input(spark, monkeypatch):
+    """Past ``_BLOCK_LOCAL_TASK_ROWS`` records per default partition,
+    the block-local pass spreads over more partitions, same output."""
+    crits, rows, make_kw = CASES["shared_key"]
+    records = spark.createDataFrame(rows, SCHEMA)
+    want, _ = _form(records, crits, None, monkeypatch, **make_kw())
+    parts = []
+    real = spine_mod._block_local_rows
+
+    def spy(*a):
+        parts.append(a[-1])
+        return real(*a)
+
+    with monkeypatch.context() as m:
+        m.setattr(spine_mod, "_BLOCK_LOCAL_TASK_ROWS", 10)
+        m.setattr(spine_mod, "_block_local_rows", spy)
+        got, took_global = _form(records, crits, None, monkeypatch, **make_kw())
+    eligible = records.filter(F.col("birthdate").isNotNull()).count()
+    assert not took_global and parts == [-(-eligible // 10)]
+    assert got == want
+
+
+#: duplicates inside one exact-key block, and across two blocks (their
+#: birthdates differ, so no entity could ever join them)
+@pytest.mark.parametrize("other_date", ["1", "2"])
 @pytest.mark.parametrize("cap", [0, None])
-def test_duplicate_event_ids_raise(spark, monkeypatch, cap):
+def test_duplicate_event_ids_raise(spark, monkeypatch, cap, other_date):
     records = spark.createDataFrame(
-        [(1, "c1", "1", "ann", "x"), (1, "c2", "1", "bob", "y")], SCHEMA
+        [(1, "c1", "1", "ann", "x"), (1, "c2", other_date, "bob", "y")], SCHEMA
     )
     with pytest.raises(Exception, match="duplicate EventId"):
         _form(records, SHARED_KEY, cap, monkeypatch)

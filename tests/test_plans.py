@@ -167,7 +167,7 @@ def test_form_entities_spine_has_no_record_window(spark, monkeypatch):
     from spinebasedrecordlinkage_jl_spark.operators import spine as spine_mod
     from spinebasedrecordlinkage_jl_spark.operators.spine import form_entities
 
-    monkeypatch.setattr(spine_mod, "_BLOCK_LOCAL_MAX_ROWS", 0)
+    monkeypatch.setattr(spine_mod, "_BLOCK_LOCAL_MAX_SIGNATURES", 0)
 
     records = spark.createDataFrame(
         [(1, "c1", "ada", "l"), (2, "c2", "adda", "l"), (3, "c3", "bob", "m")],
@@ -213,7 +213,7 @@ def test_block_local_spine_plan_is_one_python_map(spark):
     ]
     rows = _block_local_rows(
         records, crits, ["lastname"], ["lastname", "firstname"], ["firstname", "lastname"],
-        "conv_id", 10_000,
+        "conv_id", 10_000, 4,
     )
     plan = rows._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan, plan

@@ -54,7 +54,7 @@ def _spy_spine(monkeypatch):
     the global path reaches these two functions."""
     from spinebasedrecordlinkage_jl_spark.operators import spine as spine_mod
 
-    monkeypatch.setattr(spine_mod, "_BLOCK_LOCAL_MAX_ROWS", 0)
+    monkeypatch.setattr(spine_mod, "_BLOCK_LOCAL_MAX_SIGNATURES", 0)
     seen = {}
     real_cc = spine_mod.connected_components
     real_mp = spine_mod.match_pairs
