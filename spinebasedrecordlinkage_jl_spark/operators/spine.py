@@ -991,18 +991,26 @@ def form_entities(
     key_cols = _common_key(criteria, eligible.schema)
     ids_checked = False
     if key_cols and _BLOCK_LOCAL_MAX_SIGNATURES > 0:
-        # one action: the largest K block in distinct global signatures
-        # (K is part of every signature), the eligible record count, and
-        # the largest EventId multiplicity
+        # one action, three shuffles: the largest K block in distinct
+        # global signatures, the eligible record count, and the largest
+        # EventId multiplicity. K is part of every signature, so one
+        # exchange by K serves both block aggregations.
         blocks = (
-            eligible.groupBy(*global_cols)
+            eligible.repartition(*key_cols)
+            .groupBy(*global_cols)
             .agg(F.count(F.lit(1)).alias("_n"))
             .groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("_s"), F.sum("_n").alias("_n"))
-            .agg(F.max("_s").alias("largest"), F.sum("_n").alias("total"))
+            .agg(F.count(F.lit(1)).alias("_s"), F.sum("_n").alias("_n"), F.lit(0).alias("_d"))
         )
-        ids = eligible.groupBy("EventId").count().agg(F.max("count").alias("dup"))
-        stats = blocks.crossJoin(ids).first()
+        ids = eligible.groupBy("EventId").agg(
+            F.lit(0).alias("_s"), F.lit(0).alias("_n"), F.count(F.lit(1)).alias("_d")
+        )
+        stats = (
+            blocks.select("_s", "_n", "_d")
+            .unionByName(ids.select("_s", "_n", "_d"))
+            .agg(F.max("_s").alias("largest"), F.sum("_n").alias("total"), F.max("_d").alias("dup"))
+            .first()
+        )
         if (stats["dup"] or 0) > 1:
             raise ValueError(_DUPLICATE_EVENT_ID)
         ids_checked = True
