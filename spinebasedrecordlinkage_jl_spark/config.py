@@ -11,8 +11,8 @@ Differences from the reference (deliberate, Spark-first):
   asks for Jaro-Winkler alongside Levenshtein).
 - schema declarations are plain column lists (the engine compares strings
   only, exactly like the reference — ``runlinkage.jl:56``).
-- extra optional knobs for the distributed execution: ``block_salt_buckets``
-  (skew salting), ``broadcast_spine`` and ``checkpoint_dir`` (resume).
+- extra optional knobs for the distributed execution: ``broadcast_spine``
+  and ``checkpoint_dir`` (resume).
 """
 
 from __future__ import annotations
@@ -160,26 +160,14 @@ class LinkageConfig:
     criteria: tuple[LinkageCriteria, ...]
     description: str = ""
     # --- distributed-execution knobs (no reference analogue) ---
-    block_salt_buckets: int = 8  # salting factor for hot blocks
     broadcast_spine: bool = True  # force broadcast of the spine side
     checkpoint_dir: str | None = None  # resume state; default <outdir>/checkpoints
-    # entity-formation scale knobs (threaded into spine.form_entities /
-    # connected_components — the two that matter most at 100x):
+    # entity-formation scale knob (threaded into spine.form_entities):
     # blocks with more DISTINCT match signatures than this are purged
     # from fuzzy edge generation (0 = unlimited; see spine.match_pairs)
     max_block_signatures: int = 10_000
-    # connected-components knobs: they act only on form_entities' global
-    # path (no common exact key, or a block over its block-local cap)
-    cc_convergence: str = "checksum"  # "checksum" | "star"
-    cc_max_iter: int = 30
 
     def __post_init__(self) -> None:
-        if self.cc_convergence not in ("checksum", "star"):
-            raise ValueError(
-                f"cc_convergence must be 'checksum' or 'star', got {self.cc_convergence!r}"
-            )
-        if self.cc_max_iter < 1:
-            raise ValueError(f"cc_max_iter must be >= 1, got {self.cc_max_iter}")
         if self.max_block_signatures < 0:
             raise ValueError(
                 f"max_block_signatures must be >= 0 (0 = unlimited), "
@@ -249,11 +237,8 @@ def write_config(path: str | Path, config: LinkageConfig) -> None:
         "construct_entityid_from = ["
         + ", ".join(_toml_str(c) for c in config.construct_entityid_from)
         + "]",
-        f"block_salt_buckets = {config.block_salt_buckets}",
         f"broadcast_spine = {'true' if config.broadcast_spine else 'false'}",
         f"max_block_signatures = {config.max_block_signatures}",
-        f"cc_convergence = {_toml_str(config.cc_convergence)}",
-        f"cc_max_iter = {config.cc_max_iter}",
     ]
     if config.checkpoint_dir:
         out.append(f"checkpoint_dir = {_toml_str(config.checkpoint_dir)}")
@@ -325,8 +310,6 @@ def load_config(path: str | Path, check_files: bool = True) -> LinkageConfig:
         append_to_spine = true
         construct_entityid_from = ["firstname", "lastname", "birthdate"]
         max_block_signatures = 10000  # optional, 0 = unlimited
-        cc_convergence = "checksum"   # optional; global formation path only
-        cc_max_iter = 30              # optional; global formation path only
         [spine]
         datafile = ""              # empty => start empty
         columns = ["EntityId", "firstname", ...]
@@ -408,10 +391,7 @@ def load_config(path: str | Path, check_files: bool = True) -> LinkageConfig:
         construct_entityid_from=tuple(raw.get("construct_entityid_from", ())),
         tables=tables,
         criteria=criteria,
-        block_salt_buckets=int(raw.get("block_salt_buckets", 8)),
         broadcast_spine=bool(raw.get("broadcast_spine", True)),
         checkpoint_dir=raw.get("checkpoint_dir") or None,
         max_block_signatures=int(raw.get("max_block_signatures", 10_000)),
-        cc_convergence=str(raw.get("cc_convergence", "checksum")),
-        cc_max_iter=int(raw.get("cc_max_iter", 30)),
     )

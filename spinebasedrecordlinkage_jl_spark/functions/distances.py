@@ -155,81 +155,6 @@ def py_distance(metric: str, v1: str | None, v2: str | None) -> float:
 # ---------------------------------------------------------------------------
 
 
-def jaro_winkler_column(a: Column, b: Column, winkler: bool = True) -> Column:
-    """Jaro(-Winkler) distance as a pure Catalyst expression.
-
-    CORRECT but NOT the production path: Spark's higher-order functions
-    (aggregate/transform/filter) are interpreted, and lambda bodies
-    re-evaluate referenced expression TREES (not DAGs), so the char
-    arrays get recomputed per fold step — measured >3ms/row, ~1000x the
-    memoized pandas kernel. Kept for cross-validation of the kernel in
-    tests; ``distance_column`` routes jaro/jarowinkler to the Arrow
-    pandas kernel instead.
-
-    null on either side => 1.0 (distances.jl:15-16 semantics).
-    """
-    l1, l2 = F.length(a), F.length(b)
-    c1 = F.transform(F.sequence(F.lit(1), F.greatest(l1, F.lit(1))), lambda i: a.substr(i, F.lit(1)))
-    c2 = F.transform(F.sequence(F.lit(1), F.greatest(l2, F.lit(1))), lambda i: b.substr(i, F.lit(1)))
-    window = F.greatest(
-        (F.greatest(l1, l2) / 2).cast("int") - 1, F.lit(0)
-    )
-
-    # fold over s1 positions: acc = (used s2 idx, matched-from-s1, matched s2 idx)
-    init = F.struct(
-        F.array().cast("array<int>").alias("used"),
-        F.array().cast("array<string>").alias("m1"),
-        F.array().cast("array<int>").alias("j1"),
-    )
-
-    def step(acc, i):
-        lo = F.greatest(i - window, F.lit(0))
-        hi = F.least(l2 - 1, i + window)
-        cand = F.filter(
-            F.sequence(lo, F.greatest(hi, lo)),
-            lambda j: (j <= hi)
-            & (F.element_at(c2, (j + 1).cast("int")) == F.element_at(c1, (i + 1).cast("int")))
-            & ~F.array_contains(acc["used"], j.cast("int")),
-        )
-        j = F.array_min(cand)
-        return F.when(
-            j.isNotNull(),
-            F.struct(
-                F.concat(acc["used"], F.array(j.cast("int"))).alias("used"),
-                F.concat(acc["m1"], F.array(F.element_at(c1, (i + 1).cast("int")))).alias("m1"),
-                F.concat(acc["j1"], F.array(j.cast("int"))).alias("j1"),
-            ),
-        ).otherwise(acc)
-
-    folded = F.aggregate(F.sequence(F.lit(0), F.greatest(l1 - 1, F.lit(0))), init, step)
-    m = F.size(folded["m1"]).cast("double")
-    m2 = F.transform(F.array_sort(folded["j1"]), lambda j: F.element_at(c2, j + 1))
-    half_transpositions = F.size(
-        F.filter(F.zip_with(folded["m1"], m2, lambda x, y: x != y), lambda v: v)
-    ).cast("double")
-    jaro = (m / l1 + m / l2 + (m - half_transpositions / 2.0) / m) / 3.0
-
-    if winkler:
-        # common prefix length (<= 4): first position where chars differ
-        eqs = F.transform(
-            F.sequence(F.lit(1), F.lit(4)),
-            lambda i: (i <= F.least(l1, l2)) & (a.substr(i.cast("int"), F.lit(1)) == b.substr(i.cast("int"), F.lit(1))),
-        )
-        first_false = F.array_position(eqs, F.lit(False))
-        prefix = F.when(first_false > 0, first_false - 1).otherwise(F.lit(4)).cast("double")
-        sim = F.when(jaro > 0.7, jaro + prefix * 0.1 * (1.0 - jaro)).otherwise(jaro)
-    else:
-        sim = jaro
-
-    return (
-        F.when(a.isNull() | b.isNull(), F.lit(1.0))
-        .when(a == b, F.lit(0.0))
-        .when((l1 == 0) | (l2 == 0), F.lit(1.0))
-        .when(m == 0, F.lit(1.0))
-        .otherwise(1.0 - sim)
-    )
-
-
 def normalized_levenshtein_column(a: Column, b: Column) -> Column:
     """Normalized Levenshtein as a pure Catalyst expression (JVM-side,
     whole-stage codegen; never touches Python).

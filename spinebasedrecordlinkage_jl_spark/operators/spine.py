@@ -21,10 +21,11 @@ the remaining divergence to pathological chains.
   every criterion maps to the same-named spine column (``birthdate``
   for the reference goldens and the F1 gate, ``n_turns`` for
   ``q_linkage_full``). Every match edge joins two records with equal,
-  non-null K, so no entity spans two K blocks. One aggregation action
-  measures the largest K block in distinct signatures, counts the
-  eligible records and checks that EventIds are unique; when the largest
-  block holds at most ``_BLOCK_LOCAL_MAX_SIGNATURES`` signatures, the
+  non-null K, so no entity spans two K blocks. The one aggregation
+  action that checks EventIds are unique (on every call) also measures
+  the largest K block in distinct signatures and counts the eligible
+  records; when the largest block holds at most
+  ``_BLOCK_LOCAL_MAX_SIGNATURES`` signatures, the
   records are repartitioned by K and ONE Python call per partition
   (``mapInArrow``) contracts signatures, scores each criterion's pairs
   with the engine's predicate, runs union-find and emits one row per
@@ -33,8 +34,8 @@ the remaining divergence to pathological chains.
   about 5 Spark jobs per call instead of 30-60.
 - **Global** (no common key, a block over the cap, or a key column
   type the solver does not compare like Spark): the Spark edge build
-  below plus distributed connected components. ``cc_convergence`` and
-  ``cc_max_iter`` act only here.
+  below plus distributed connected components over global signatures,
+  each node keyed by its signature's first-record EventId.
 
 Connected components uses the alternating large-star/small-star
 contraction of Kiveris et al., "Connected Components in MapReduce and
@@ -49,13 +50,11 @@ executor fails the job instead of recomputing).
 
 from __future__ import annotations
 
-import os as _os
-import time as _time
+from functools import reduce
 
-from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructType
+from pyspark.sql.types import IntegralType, StringType, StructType
 
 from ..config import LinkageCriteria
 from ..functions.distances import attach_distance, py_distance
@@ -85,76 +84,6 @@ _DUPLICATE_EVENT_ID = (
     "form_entities: duplicate EventId; deduplicate records (dedup_events) "
     "before entity formation"
 )
-
-# ---------------------------------------------------------------------------
-# Graph node ids: 64-bit ids, 128-bit collision SAFETY
-# ---------------------------------------------------------------------------
-#
-# At the documented 10^12-turn / ~10^9-unique-signature design point a
-# 64-bit node-id space has a few-percent birthday probability of at
-# least one collision — which would silently merge unrelated records
-# into one entity, bypassing all match logic. Running the whole graph on
-# 128-bit struct ids closes that, but measured ~60% slower connected
-# components (struct keys miss the primitive-key fast paths in every
-# groupBy/join of every round). So instead:
-#
-# - the ONLY hashed node ids in the graph are the global-signature
-#   (gsig) ids minted by form_entities; the edge generators themselves
-#   (exact_key_edges / match_pairs) are star-contracted onto MIN-EventId
-#   representatives computed from the raw columns, so they introduce no
-#   hashed ids at all;
-# - every gsig node carries TWO independent 64-bit hashes (h1, h2);
-#   h1 is the node id;
-# - before edge building, form_entities groups the signature relation by
-#   h1 and collects the h1 values shared by distinct (h1, h2) pairs
-#   (one linear aggregation — no pairwise work). Expected size at 10^9
-#   signatures: ~0.03 entries (n^2/2^65) — virtually always empty;
-# - colliding nodes (only) are deterministically remapped to
-#   xxhash64(h1, h2), restoring uniqueness; everyone else keeps h1, so
-#   the hot path pays nothing.
-#
-# The result is exact: the ids actually used are verified unique over
-# the actual node population — including the remapped ids themselves,
-# which are re-checked against the population whenever the collision set
-# is non-empty (_assert_ids_unique) — so the record->component join-back
-# can never silently merge, while CC, the unions, and the distincts all
-# run on primitive longs.
-
-
-def _node_hashes(tag: str, cols: list[Column]) -> tuple[Column, Column]:
-    """Two independent 64-bit hashes identifying a synthetic node."""
-    return (
-        F.xxhash64(F.lit(tag + "#a"), *cols),
-        F.xxhash64(F.lit(tag + "#b"), *cols),
-    )
-
-
-def _assert_ids_unique(pop: DataFrame, collide: frozenset[int]) -> None:
-    """Verify the FINAL node ids (h1, or xxhash64(h1, h2) for audited
-    collisions) are unique over the distinct (h1, h2) node population
-    (callers pass an already-distinct relation); raise if a remapped id
-    aliases any other node's id."""
-    final_id = F.when(
-        F.col("h1").isin(*collide), F.xxhash64(F.col("h1"), F.col("h2"))
-    ).otherwise(F.col("h1"))
-    dups = pop.select(final_id.alias("id")).groupBy("id").agg(
-        F.count("*").alias("_n")
-    ).filter(F.col("_n") > 1)
-    if not dups.isEmpty():
-        raise RuntimeError(
-            "node-id collision remap produced a non-unique id; "
-            "rerun with different criteria tags or report this input"
-        )
-
-
-def _node64(tag: str, cols: list[Column], collide: frozenset[int] = frozenset()) -> Column:
-    """Collision-checked 64-bit node id: h1, unless h1 is in the
-    (verified, almost always empty) collision set — then xxhash64(h1, h2)."""
-    h1, h2 = _node_hashes(tag, cols)
-    if not collide:
-        return h1
-    return F.when(h1.isin(*collide), F.xxhash64(h1, h2)).otherwise(h1)
-
 
 # ---------------------------------------------------------------------------
 # Connected components (large-star / small-star)
@@ -198,103 +127,68 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return e1.union(e2).filter(F.col("src") != F.col("dst")).distinct()
 
 
-#: "auto" convergence picks star below this many edges (env
-#: SPINELINK_CC_AUTO_STAR_EDGES). Rationale in connected_components.
-_CC_AUTO_STAR_EDGES = int(_os.environ.get("SPINELINK_CC_AUTO_STAR_EDGES", "2000000"))
+#: connected_components runs the whole graph through ONE single-task
+#: union-find stage at or below this many measured edges. Micro-bench:
+#: 100k edges = 0.14s, 1M = 2.2s in one Python task, vs >= 0.5s of fixed
+#: stage latency PER iterative round (typical graphs need 1-4 rounds) —
+#: the crossover sits around a few hundred thousand edges (round latency
+#: is dominated by scheduling, not shuffle bytes, at these sizes). Above
+#: it the iterative contraction keeps its distributed guarantees.
+_CC_SINGLE_TASK_EDGES = 200_000
 
-#: "auto" runs the whole graph through ONE single-task union-find stage
-#: below this many measured edges (env SPINELINK_CC_SINGLE_TASK_EDGES).
-#: Micro-bench (this box): 100k edges = 0.14s, 1M = 2.2s in one Python
-#: task, vs >= 0.5s of fixed stage latency PER iterative round (typical
-#: graphs need 1-4 rounds) — the crossover sits around a few hundred
-#: thousand edges, on a cluster as here (round latency is dominated by
-#: scheduling, not shuffle bytes, at these sizes). Above the cap the
-#: iterative contraction keeps its distributed guarantees.
-_CC_SINGLE_TASK_EDGES = int(_os.environ.get("SPINELINK_CC_SINGLE_TASK_EDGES", "200000"))
+#: Above the single-task tier, the iterative contraction stops by the
+#: star test at or below this many measured edges and by the checksum
+#: above it (rationale in connected_components).
+_CC_AUTO_STAR_EDGES = 2_000_000
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 30, convergence: str = "auto"
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src, dst) -> components(id, component).
 
-    Node ids may be any orderable type (long is the fast path — struct
-    keys measured ~60% slower per round) as long as src and dst agree.
-    ``component`` is the minimum node id of each component. Nodes that
-    only appear as isolated vertices are the caller's concern (left-join
+    Node ids are longs (src and dst are cast). ``component`` is the
+    minimum node id of each component. Nodes that only appear as
+    isolated vertices or self-loops are the caller's concern (left-join
     + coalesce with their own id).
 
-    ``convergence`` (all sound — the mode only decides WHEN to stop, the
-    fixpoint edge set is identical):
-    - ``"auto"`` (default, r6): derive the mode from the measured edge
-      count at bootstrap — ``star`` when the materialized edge relation
-      is small (<= SPINELINK_CC_AUTO_STAR_EDGES, default 2M: there the
-      per-round cost is stage latency, not shuffle bytes, and star's
-      one-round-earlier stop wins), ``checksum`` when it is large (the
-      r5 measurement: a star default cost +36%/+56% on the 26M-turn
-      bootstrap because its per-round check shuffles the full edge
-      relation while checksum's is a shuffle-free aggregate). The count
-      is one cheap job over the already-cached bootstrap RDD — a
-      scale-adaptive decision instead of a constant tuned for either
-      regime (optimization guide §2).
-    - ``"checksum"``/``"star"`` force a mode:
-    - ``"checksum"``: stop when (count, bit_xor hash) repeats — a
-      shuffle-free single-stage aggregate per round, but always runs one
-      confirming round past the fixpoint.
-    - ``"star"``: small_star's output orients every edge src > dst, so
-      the edge set is a fixpoint iff it is a star forest (no node on
-      both sides AND one dst per src). Testing THIS round's output (one
-      groupBy over the node roles) stops one full contraction round
-      earlier than checksum equality at the cost of a full shuffle per
-      check — fewest driver-coordinated rounds, for regimes where round
-      count dominates shuffle cost (very long chains, tiny edge sets).
-    """
-    import os
-    import time
+    The tier follows the edge count, one cheap count of the
+    materialized edge relation; all tiers give the same components:
 
-    debug = os.environ.get("SPINELINK_CC_DEBUG") == "1"
-    t0 = time.time()
-    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if not isinstance(e.schema["src"].dataType, StructType):
-        e = e.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    e = e.localCheckpoint(eager=True)
-    if convergence == "auto":
-        n_edges = e.count()  # cached RDD — one cheap scan, no shuffle
-        if (
-            n_edges <= _CC_SINGLE_TASK_EDGES
-            and not isinstance(e.schema["src"].dataType, StructType)
-        ):
-            # r6 tiny-graph tier (guide §2 "scale-adaptive decisions"):
-            # the MEASURED edge relation is small enough that one Python
-            # union-find task beats any number of iterative rounds of
-            # fixed stage latency. Same output contract (one row per
-            # node of a non-self-loop edge, component = min node id —
-            # union-by-min makes every root the component minimum);
-            # equivalence is pinned by test_single_task_matches_iterative.
-            if debug:
-                print(
-                    f"[cc] bootstrap (edge materialization): {time.time() - t0:.2f}s"
-                    f" mode=single-task n_edges={n_edges}",
-                    flush=True,
-                )
-            # lazy checkpoint: callers (form_entities) consume the
-            # component map in several plan branches; without it every
-            # branch would re-run the union-find stage (the iterative
-            # path's output is a cheap projection of the per-round
-            # checkpointed edges, this one is real work). eager=False
-            # costs nothing until first materialized.
-            return (
-                e.groupBy(F.lit(0).alias("_g"))
-                .applyInPandas(_union_find_pdf, "id long, component long")
-                .localCheckpoint(eager=False)
-            )
-        convergence = "star" if n_edges <= _CC_AUTO_STAR_EDGES else "checksum"
-    if debug:
-        print(
-            f"[cc] bootstrap (edge materialization): {time.time() - t0:.2f}s"
-            f" mode={convergence}",
-            flush=True,
+    - at most ``_CC_SINGLE_TASK_EDGES``: one single-task union-find
+      stage, cheaper than any number of iterative rounds of fixed stage
+      latency;
+    - at most ``_CC_AUTO_STAR_EDGES``: large-star/small-star rounds
+      stopped by the star test. small_star's output orients every edge
+      src > dst, so the edge set is a fixpoint iff it is a star forest
+      (no node on both sides AND one dst per src). Testing THIS round's
+      output (one groupBy over the node roles) stops one round earlier
+      than checksum equality, at the cost of a shuffle per check.
+      Measured on local[4], 4 interleaved pairs per size: star 8.3 vs
+      checksum 9.3 s at 1M edges, 15.1 vs 16.2 s at 1.9M, a tie at 300k;
+    - above: rounds stopped when (count, bit_xor hash) repeats — a
+      shuffle-free single-stage aggregate per round that runs one
+      confirming round past the fixpoint. r5 measured it 36-56% faster
+      than star on the 26M-turn bootstrap, where star's per-round check
+      shuffles the full edge relation.
+    """
+    e = (
+        edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
+        .filter(F.col("src") != F.col("dst"))
+        .localCheckpoint(eager=True)
+    )
+    n_edges = e.count()  # cached RDD — one cheap scan, no shuffle
+    if n_edges <= _CC_SINGLE_TASK_EDGES:
+        # Same output contract as the iterative tiers (one row per node
+        # of a non-self-loop edge, component = min node id — union-by-min
+        # makes every root the component minimum). Lazy checkpoint:
+        # callers (form_entities) consume the component map in several
+        # plan branches, and without it every branch would re-run the
+        # union-find stage.
+        return (
+            e.groupBy(F.lit(0).alias("_g"))
+            .applyInPandas(_union_find_pdf, "id long, component long")
+            .localCheckpoint(eager=False)
         )
+    star = n_edges <= _CC_AUTO_STAR_EDGES
 
     def _checksum(df: DataFrame) -> tuple[int, int]:
         row = df.agg(
@@ -322,25 +216,20 @@ def connected_components(
         return not bad.isEmpty()
 
     prev = None
-    for _round in range(max_iter):
-        t0 = time.time()
-        e = _large_star(e)
-        e = _small_star(e)
+    for _ in range(30):
         # lazy checkpoint: the convergence action below materializes it,
         # so each round costs exactly one job (plus its shuffles)
-        e = e.localCheckpoint(eager=False)
-        if convergence == "star":
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        if star:
             done = not _has_chains(e)
         else:
             cur = _checksum(e)
             done = cur == prev
             prev = cur
-        if debug:
-            print(f"[cc] round {_round}: {time.time() - t0:.2f}s done={done}", flush=True)
         if done:
             break
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        raise RuntimeError("connected_components did not converge in 30 rounds")
 
     # Fixpoint edges form stars (node -> component min). The roots
     # themselves are members of their own component.
@@ -888,6 +777,20 @@ def _block_local_rows(
     )
 
 
+def _on_signature(
+    records: DataFrame, sigs: DataFrame, cols: list[str], keep: list[str], how: str
+) -> DataFrame:
+    """``records`` joined to ``sigs`` null-safe on the raw signature
+    columns ``cols`` (a signature tuple may hold nulls), carrying
+    ``sigs``' columns ``keep``."""
+    s = sigs.select(*[F.col(c).alias(f"_s{i}") for i, c in enumerate(cols)], *keep)
+    cond = reduce(
+        lambda x, y: x & y,
+        [F.col(c).eqNullSafe(F.col(f"_s{i}")) for i, c in enumerate(cols)],
+    )
+    return records.join(s, cond, how).drop(*[f"_s{i}" for i in range(len(cols))])
+
+
 def form_entities(
     unlinked: DataFrame,
     criteria: list[LinkageCriteria],
@@ -897,8 +800,6 @@ def form_entities(
     max_block_signatures: int | None = 10_000,
     order_col: str | None = None,
     entity_id_expr: Column | None = None,
-    cc_convergence: str = "auto",
-    cc_max_iter: int = 30,
 ) -> tuple[DataFrame, DataFrame]:
     """Create entities from unlinked records -> ``(new_spine_rows, links)``.
 
@@ -919,15 +820,20 @@ def form_entities(
     - links: every member -> its component's entity, CriteriaId = first
       criterion with complete data (the guaranteed re-link of
       runlinkage.jl:175).
-    - EventIds must be unique, or ValueError: checked in the block
-      measure when the criteria share an exact key, otherwise in the
-      global path's concurrent audit job.
+    - EventIds must be integral (every producer in the package emits
+      ``xxhash64`` longs) and unique, or ValueError: the global path
+      keys graph nodes by EventId. Uniqueness is checked by one
+      aggregation action on every call, before either path runs.
 
     The block-local path (module docstring) runs when the criteria share
     an exact key and its largest block holds at most
-    ``_BLOCK_LOCAL_MAX_SIGNATURES`` distinct signatures;
-    ``cc_convergence`` and ``cc_max_iter`` act only on the global path.
+    ``_BLOCK_LOCAL_MAX_SIGNATURES`` distinct signatures.
     """
+    ev_type = unlinked.schema["EventId"].dataType
+    if not isinstance(ev_type, IntegralType):
+        raise ValueError(
+            f"form_entities: EventId must be an integral type, got {ev_type.simpleString()}"
+        )
     elig_cond = F.lit(False)
     for c in criteria:
         elig_cond = elig_cond | _exact_complete_cond(c)
@@ -951,7 +857,6 @@ def form_entities(
         ):
             if col not in global_cols:
                 global_cols.append(col)
-    gs_cols = [F.coalesce(F.col(c), F.lit("\x00")) for c in global_cols]
 
     # Representative-record struct, defined here because the signature
     # contraction below FUSES the distinct-signature pass with the
@@ -989,12 +894,15 @@ def form_entities(
     )
 
     key_cols = _common_key(criteria, eligible.schema)
-    ids_checked = False
-    if key_cols and _BLOCK_LOCAL_MAX_SIGNATURES > 0:
-        # one action, three shuffles: the largest K block in distinct
-        # global signatures, the eligible record count, and the largest
-        # EventId multiplicity. K is part of every signature, so one
-        # exchange by K serves both block aggregations.
+    local = bool(key_cols) and _BLOCK_LOCAL_MAX_SIGNATURES > 0
+    # one action: the largest EventId multiplicity and, when the
+    # block-local path may run, the largest K block in distinct global
+    # signatures and the eligible record count. K is part of every
+    # signature, so one exchange by K serves both block aggregations.
+    parts = eligible.groupBy("EventId").agg(
+        F.lit(0).alias("_s"), F.lit(0).alias("_n"), F.count(F.lit(1)).alias("_d")
+    ).drop("EventId")
+    if local:
         blocks = (
             eligible.repartition(*key_cols)
             .groupBy(*global_cols)
@@ -1002,208 +910,118 @@ def form_entities(
             .groupBy(*key_cols)
             .agg(F.count(F.lit(1)).alias("_s"), F.sum("_n").alias("_n"), F.lit(0).alias("_d"))
         )
-        ids = eligible.groupBy("EventId").agg(
-            F.lit(0).alias("_s"), F.lit(0).alias("_n"), F.count(F.lit(1)).alias("_d")
+        parts = blocks.select("_s", "_n", "_d").unionByName(parts)
+    stats = parts.agg(
+        F.max("_s").alias("largest"), F.sum("_n").alias("total"), F.max("_d").alias("dup")
+    ).first()
+    if (stats["dup"] or 0) > 1:
+        raise ValueError(_DUPLICATE_EVENT_ID)
+    if local and (stats["largest"] or 0) <= _BLOCK_LOCAL_MAX_SIGNATURES:
+        n_parts = max(
+            int(eligible.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+            -(-(stats["total"] or 0) // _BLOCK_LOCAL_TASK_ROWS),
         )
-        stats = (
-            blocks.select("_s", "_n", "_d")
-            .unionByName(ids.select("_s", "_n", "_d"))
-            .agg(F.max("_s").alias("largest"), F.sum("_n").alias("total"), F.max("_d").alias("dup"))
-            .first()
+        rows = _block_local_rows(
+            eligible,
+            criteria,
+            key_cols,
+            global_cols,
+            carry_cols,
+            order_col if order_fields else None,
+            max_block_signatures,
+            n_parts,
+        ).localCheckpoint(eager=True)
+        new_spine = rows.filter(F.col("_is_rep")).select(
+            entity_id.alias("EntityId"),
+            F.col("_rep_event").alias("spine_seq"),
+            *[F.col(c) for c in rep_cols],
         )
-        if (stats["dup"] or 0) > 1:
-            raise ValueError(_DUPLICATE_EVENT_ID)
-        ids_checked = True
-        if (stats["largest"] or 0) <= _BLOCK_LOCAL_MAX_SIGNATURES:
-            n_parts = max(
-                int(eligible.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-                -(-(stats["total"] or 0) // _BLOCK_LOCAL_TASK_ROWS),
-            )
-            rows = _block_local_rows(
-                eligible,
-                criteria,
-                key_cols,
-                global_cols,
-                carry_cols,
-                order_col if order_fields else None,
-                max_block_signatures,
-                n_parts,
-            ).localCheckpoint(eager=True)
-            new_spine = rows.filter(F.col("_is_rep")).select(
-                entity_id.alias("EntityId"),
-                F.col("_rep_event").alias("spine_seq"),
-                *[F.col(c) for c in rep_cols],
-            )
-            links = rows.filter(F.col("_cid").isNotNull()).select(
-                F.lit(tablename).alias("TableName"),
-                F.col("_ev").alias("EventId"),
-                entity_id.alias("EntityId"),
-                F.col("_cid").alias("CriteriaId"),
-            )
-            return new_spine, links
+        links = rows.filter(F.col("_cid").isNotNull()).select(
+            F.lit(tablename).alias("TableName"),
+            F.col("_ev").alias("EventId"),
+            entity_id.alias("EntityId"),
+            F.col("_cid").alias("CriteriaId"),
+        )
+        return new_spine, links
 
-    # one blocking job: the fused contraction shuffle; everything
-    # downstream (audit, edge generation, representatives) reads the
-    # cached result
-    _t0 = _time.time()
+    # Global path. One blocking job, the fused contraction shuffle;
+    # edge generation and representatives read its cached result. A
+    # signature's graph node ``_gs`` is its first record's EventId:
+    # injective, because EventIds are unique and each record has
+    # exactly one signature.
     sig_base = (
-        eligible.groupBy(*[F.col(c) for c in global_cols])
+        eligible.groupBy(*global_cols)
         .agg(F.min(m_struct).alias("_m"))
+        .withColumn("_gs", F.col("_m._e"))
         .localCheckpoint(eager=True)
     )
-    sigs_rel = sig_base.select(*global_cols)
-    if _os.environ.get("SPINELINK_CC_DEBUG") == "1":
-        print(f"[form] signature contraction: {_time.time() - _t0:.2f}s", flush=True)
+    gs_records = sig_base.select(*global_cols, F.col("_gs").alias("EventId"))
 
-    # Node-id collision audit over the LINEAR node population (see the
-    # node-id note at the top): one aggregation job on the contracted
-    # relation; the collected set is expected empty (~n^2/2^65 entries).
-    # Since the edge generators are star-contracted (exact_key_edges /
-    # match_pairs point records at MIN-EventId representatives computed
-    # from the raw columns — no synthetic hashed nodes), the only hashed
-    # ids in the graph are the gsig ids themselves, so the audit is one
-    # groupBy over the signature relation. A collision is an h1 carried
-    # by >= 2 distinct (h1, h2) nodes — countDistinct(h2) per h1 detects
-    # that without a separate distinct shuffle.
-    gh1, gh2 = _node_hashes("gsig", gs_cols)
-    pop = sigs_rel.select(gh1.alias("h1"), gh2.alias("h2"))
-
-    # Run the audit CONCURRENTLY with the optimistic (empty-collide)
-    # edge build + connected components: the collision set is empty for
-    # all practical inputs (~n^2/2^65 expected entries at the 10^9-node
-    # design point), so the optimistic plan is virtually always the
-    # final plan and the audit's aggregation job comes off the serial
-    # critical path — on a cluster the two jobs share executors; here
-    # they share local cores. The audit is joined BEFORE any result is
-    # trusted; on the ~never branch the contraction is rebuilt with the
-    # remapped ids (discarding the optimistic work).
-    audit: dict = {}
-
-    def _run_audit() -> None:
-        try:
-            # the same thread checks the EventId precondition unless the
-            # block measure above did: singleton components are keyed by
-            # EventId, so a duplicate would fan its links out across both
-            # records' entities
-            if not ids_checked and (
-                eligible.groupBy("EventId").count().filter(F.col("count") > 1).limit(1).count()
-            ):
-                raise ValueError(_DUPLICATE_EVENT_ID)
-            audit["collide"] = frozenset(
-                r["h1"]
-                for r in pop.groupBy("h1")
-                .agg(F.count_distinct("h2").alias("_n"))
-                .filter(F.col("_n") > 1)
-                .select("h1")
-                .collect()
+    edges = None
+    for c in criteria:
+        # exact-only criteria: linear min-member key stars (skew-
+        # immune); fuzzy criteria: signature-pair scored edges within
+        # the exact block, star-contracted to min representatives.
+        # r6: gs_records is distinct on the GLOBAL signature tuple by
+        # construction, so when this criterion reads every global
+        # column the generator's own contraction groupBy + record
+        # join-back are identity operations — pass the distinct flag
+        # and they are skipped (2-3 exchanges less per criterion;
+        # identical edges).
+        # exact_key_edges groups on the KEY columns alone, match_pairs
+        # on the criterion's full signature tuple — each flag asserts
+        # distinctness on exactly the columns its generator groups by
+        key_covers = set(c.exactmatch.keys()) == set(global_cols)
+        sig_covers = set(
+            list(c.exactmatch.keys())
+            + list(c.exactmatch.values())
+            + [am.datacolumn for am in c.approxmatch]
+            + [am.spinecolumn for am in c.approxmatch]
+        ) == set(global_cols)
+        p = (
+            exact_key_edges(gs_records, c, records_distinct_on_key=key_covers)
+            if not c.approxmatch
+            else match_pairs(
+                gs_records,
+                c,
+                max_block_signatures=max_block_signatures,
+                records_distinct_on_sig=sig_covers,
             )
-        except BaseException as exc:  # surfaced on join()
-            audit["error"] = exc
-
-    # InheritableThread, not threading.Thread: under PySpark's default
-    # pinned-thread mode a raw Python thread pins a JVM thread that is
-    # never released when the Python thread exits (one leaked JVM thread
-    # per form_entities call in a long-lived driver — multi-table runs,
-    # streaming), and job-group/local properties are not inherited, so
-    # cancelling the caller's job group would not cancel the audit job.
-    audit_thread = InheritableThread(target=_run_audit, daemon=True)
-    audit_thread.start()
-
-    def _contract(collide: frozenset[int]) -> tuple[DataFrame, DataFrame]:
-        _te = _time.time()
-        gs = _node64("gsig", gs_cols, collide)
-        eligible_g = eligible.withColumn("_gs", gs)
-        gs_records = sigs_rel.withColumn("EventId", _node64("gsig", gs_cols, collide))
-
-        edges = None
-        for c in criteria:
-            # exact-only criteria: linear min-member key stars (skew-
-            # immune); fuzzy criteria: signature-pair scored edges within
-            # the exact block, star-contracted to min representatives.
-            # r6: gs_records is distinct on the GLOBAL signature tuple by
-            # construction, so when this criterion reads every global
-            # column the generator's own contraction groupBy + record
-            # join-back are identity operations — pass the distinct flag
-            # and they are skipped (2-3 exchanges less per criterion;
-            # identical edges).
-            # exact_key_edges groups on the KEY columns alone, match_pairs
-            # on the criterion's full signature tuple — each flag asserts
-            # distinctness on exactly the columns its generator groups by
-            key_covers = set(c.exactmatch.keys()) == set(global_cols)
-            sig_covers = set(
-                list(c.exactmatch.keys())
-                + list(c.exactmatch.values())
-                + [am.datacolumn for am in c.approxmatch]
-                + [am.spinecolumn for am in c.approxmatch]
-            ) == set(global_cols)
-            p = (
-                exact_key_edges(gs_records, c, records_distinct_on_key=key_covers)
-                if not c.approxmatch
-                else match_pairs(
-                    gs_records,
-                    c,
-                    max_block_signatures=max_block_signatures,
-                    records_distinct_on_sig=sig_covers,
-                )
-            )
-            # fresh output attributes per union branch: the branches share
-            # lineage (all derive from `gs_records`), which trips Catalyst's
-            # Union constraint rewriting (NoSuchElementException on a reused
-            # attribute id) on Spark 4.1
-            p = p.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
-            edges = p if edges is None else edges.union(p)
-        # no distinct here: cross-criteria duplicate edges do not change
-        # any per-node minimum and the first CC round's aggregations
-        # absorb them — the distinct would add a full shuffle of the edge
-        # relation to the bootstrap for nothing
-        edges = edges.localCheckpoint(eager=False)
-        if _os.environ.get("SPINELINK_CC_DEBUG") == "1":
-            print(f"[form] edge plan build: {_time.time() - _te:.2f}s", flush=True)
-        # (id, component) over signatures
-        comp = connected_components(edges, max_iter=cc_max_iter, convergence=cc_convergence)
-        # self-loops mark PARTICIPATING signatures (self-matching under
-        # some criterion) whose node has no real edge — their records
-        # must merge with each other (the reference's append-then-self-
-        # link), but CC never sees them (it drops self-loops). Add them
-        # as their own single-node components; nodes already in a real
-        # component are excluded so the map stays one row per node.
-        selfpart = (
-            edges.filter(F.col("src") == F.col("dst"))
-            .select(F.col("src").alias("id"))
-            .distinct()
-            .join(comp.select("id"), "id", "left_anti")
-            .select("id", F.col("id").alias("component"))
         )
-        comp = comp.unionByName(selfpart)
-        return eligible_g, comp
-
-    _t1 = _time.time()
-    eligible_g, comp = _contract(frozenset())
-    if _os.environ.get("SPINELINK_CC_DEBUG") == "1":
-        print(f"[form] contract (plan build + CC): {_time.time() - _t1:.2f}s", flush=True)
-    _t1 = _time.time()
-    audit_thread.join()
-    if _os.environ.get("SPINELINK_CC_DEBUG") == "1":
-        print(f"[form] audit join wait: {_time.time() - _t1:.2f}s", flush=True)
-    if "error" in audit:
-        raise audit["error"]
-    collide = audit["collide"]
-    if collide:
-        # Re-verify the REMAPPED ids against the full (distinct) node
-        # population: xxhash64(h1, h2) could itself (at ~2^-64 per
-        # remap) alias an existing h1. Then rebuild the contraction with
-        # the remap — only on the ~never branch.
-        _assert_ids_unique(pop.distinct(), collide)
-        eligible_g, comp = _contract(collide)
-    final_collide = collide if collide else frozenset()
+        # fresh output attributes per union branch: the branches share
+        # lineage (all derive from `gs_records`), which trips Catalyst's
+        # Union constraint rewriting (NoSuchElementException on a reused
+        # attribute id) on Spark 4.1
+        p = p.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
+        edges = p if edges is None else edges.union(p)
+    # no distinct here: cross-criteria duplicate edges do not change
+    # any per-node minimum and the first CC round's aggregations
+    # absorb them — the distinct would add a full shuffle of the edge
+    # relation to the bootstrap for nothing
+    edges = edges.localCheckpoint(eager=False)
+    comp = connected_components(edges)
+    # self-loops mark PARTICIPATING signatures (self-matching under
+    # some criterion) whose node has no real edge — their records
+    # must merge with each other (the reference's append-then-self-
+    # link), but CC never sees them (it drops self-loops). Add them
+    # as their own single-node components; nodes already in a real
+    # component are excluded so the map stays one row per node.
+    selfpart = (
+        edges.filter(F.col("src") == F.col("dst"))
+        .select(F.col("src").alias("id"))
+        .distinct()
+        .join(comp.select("id"), "id", "left_anti")
+        .select("id", F.col("id").alias("component"))
+    )
+    comp = comp.unionByName(selfpart).withColumnRenamed("id", "_gs")
 
     # Records of a signature with NO surviving edge stay singletons —
     # merging them through the bare signature node would diverge from
     # pairwise semantics (e.g. identical records whose only complete
     # criterion fails its fuzzy threshold on a null: missing has distance
-    # 1.0, distances.jl:15-16). Component keys are (flag, id) structs so
-    # a singleton's EventId can never alias a component's 64-bit node id
-    # (they live in different hash populations).
+    # 1.0, distances.jl:15-16). A singleton is keyed by its own EventId
+    # and a component by its minimum node, the EventId of one of its own
+    # records, so the two never share a key.
     #
     # Representative record per component: first in natural-key order
     # (the reference's spine row carries the FIRST record's values —
@@ -1217,15 +1035,9 @@ def form_entities(
     # level — instead of a row_number window that shuffled AND sorted
     # every record on a struct key (measured ~70% of form_entities wall
     # time on the 208M-turn bootstrap).
-    comp_g = comp.withColumnRenamed("id", "_gs")
-    comp_struct = F.struct(F.lit(0).alias("s"), F.col("component").alias("v"))
-    sig_first = sig_base.withColumn(
-        "_gs", _node64("gsig", gs_cols, final_collide)
-    ).select("_gs", "_m")
-    in_comp = sig_first.join(comp_g, "_gs", "inner")
+    in_comp = sig_base.join(comp, "_gs")
     rep_rows = (
-        in_comp.select(comp_struct.alias("_component"), "_m")
-        .groupBy("_component")
+        in_comp.groupBy(F.col("component").alias("_component"))
         .agg(F.min("_m").alias("_m"))
         .select(
             "_component",
@@ -1239,9 +1051,9 @@ def form_entities(
     # complete signatures can miss comp — every exact-complete signature
     # at least self-loops), so AQE broadcasts the semi-join probe and the
     # record side never shuffles in the common case.
-    sig_out = sig_first.join(comp_g.select("_gs"), "_gs", "left_anti").select("_gs")
-    single_rows = eligible_g.join(sig_out, "_gs", "left_semi").select(
-        F.struct(F.lit(1).alias("s"), F.col("EventId").alias("v")).alias("_component"),
+    sig_out = sig_base.join(comp, "_gs", "left_anti")
+    single_rows = _on_signature(eligible, sig_out, global_cols, [], "left_semi").select(
+        F.col("EventId").alias("_component"),
         F.col("EventId").alias("_rep_event"),
         *[F.col(c) for c in carry_cols],
     )
@@ -1268,19 +1080,13 @@ def form_entities(
     # per-record membership — lazy: only callers that consume the links
     # frame pay this record-level join (the production relink path uses
     # its own link_table pass and never executes it)
-    members = eligible_g.join(
-        in_comp.select("_gs", comp_struct.alias("component")), "_gs", "left"
-    ).withColumn(
-        "component",
-        F.coalesce(
-            F.col("component"),
-            F.struct(F.lit(1).alias("s"), F.col("EventId").alias("v")),
-        ),
+    members = _on_signature(eligible, in_comp, global_cols, ["component"], "left").withColumn(
+        "component", F.coalesce(F.col("component"), F.col("EventId"))
     )
     links = (
         members.join(
             new_spine.select("_component", "EntityId"),
-            members["component"] == F.col("_component"),
+            F.col("component") == F.col("_component"),
             "inner",
         )
         .withColumn("_cid", crit_id.cast("int"))

@@ -201,8 +201,6 @@ def run_linkage(
                 # 0 = unlimited in TOML (None internally)
                 max_block_signatures=config.max_block_signatures or None,
                 order_col=tcfg.primarykey[0],
-                cc_convergence=config.cc_convergence,
-                cc_max_iter=config.cc_max_iter,
             )
             spine = spine_cached.unionByName(
                 new_spine, allowMissingColumns=True

@@ -53,6 +53,13 @@ CROSSED = [
     ),
 ]
 
+#: CROSSED shares birthdate; dropping it from the second criterion
+#: leaves no column every criterion maps to itself
+NO_KEY = [
+    CROSSED[0],
+    LinkageCriteria(id=2, tablename="t", exactmatch={"lastname": "lastname"}),
+]
+
 
 def _rows(seed: int, n: int = 120, n_dates: int = 3):
     rnd = random.Random(seed)
@@ -101,7 +108,10 @@ def _form(records, crits, cap, monkeypatch, **kw):
 #: Column expressions need the session). The purge case has ~3 records
 #: per birthdate block, so some blocks hold one (birthdate, firstname)
 #: signature of criterion 2 but several global signatures: the purge
-#: must count the former.
+#: must count the former. The null-vs-NUL case holds two records of one
+#: birthdate whose firstname (approx) and lastname (exact key of
+#: criterion 1) are a null and a "\x00" crosswise: they match under no
+#: criterion, so they must stay two entities.
 CASES = {
     "shared_key": (SHARED_KEY, _rows(1, n_dates=40), lambda: {"order_col": "conv_id"}),
     "purge_no_order_custom_id": (
@@ -116,6 +126,11 @@ CASES = {
         CROSSED,
         _rows(3),
         lambda: {"order_col": "conv_id", "max_block_signatures": 3},
+    ),
+    "null_vs_nul": (
+        SHARED_KEY,
+        _rows(5, n_dates=40) + [(1, "c1", "1", None, "\x00"), (2, "c2", "1", "\x00", None)],
+        lambda: {"order_col": "conv_id"},
     ),
 }
 
@@ -142,14 +157,8 @@ def test_empty_input_matches_global(spark, monkeypatch):
 
 def test_no_common_key_or_oversized_block_takes_global_path(spark, monkeypatch):
     records = spark.createDataFrame(_rows(4, n=30), SCHEMA)
-    # CROSSED shares birthdate; dropping it from the second criterion
-    # leaves no column every criterion maps to itself
-    no_key = [
-        CROSSED[0],
-        LinkageCriteria(id=2, tablename="t", exactmatch={"lastname": "lastname"}),
-    ]
-    assert spine_mod._common_key(no_key, records.schema) == []
-    _, took_global = _form(records, no_key, None, monkeypatch)
+    assert spine_mod._common_key(NO_KEY, records.schema) == []
+    _, took_global = _form(records, NO_KEY, None, monkeypatch)
     assert took_global
     # every birthdate block of 30 records holds more than 2 signatures
     _, took_global = _form(records, SHARED_KEY, 2, monkeypatch)
@@ -179,12 +188,23 @@ def test_partition_count_grows_with_input(spark, monkeypatch):
 
 
 #: duplicates inside one exact-key block, and across two blocks (their
-#: birthdates differ, so no entity could ever join them)
+#: birthdates differ, so no entity could ever join them), under criteria
+#: with and without a common exact key
 @pytest.mark.parametrize("other_date", ["1", "2"])
 @pytest.mark.parametrize("cap", [0, None])
 def test_duplicate_event_ids_raise(spark, monkeypatch, cap, other_date):
     records = spark.createDataFrame(
         [(1, "c1", "1", "ann", "x"), (1, "c2", other_date, "bob", "y")], SCHEMA
     )
-    with pytest.raises(Exception, match="duplicate EventId"):
-        _form(records, SHARED_KEY, cap, monkeypatch)
+    for crits in (SHARED_KEY, NO_KEY):
+        with pytest.raises(ValueError, match="duplicate EventId"):
+            _form(records, crits, cap, monkeypatch)
+
+
+def test_string_event_id_raises(spark, monkeypatch):
+    """The global path keys graph nodes by EventId, so it must be integral."""
+    records = spark.createDataFrame(
+        [("1", "c1", "1", "ann", "x")], SCHEMA.replace("EventId long", "EventId string")
+    )
+    with pytest.raises(ValueError, match="EventId must be an integral type"):
+        _form(records, SHARED_KEY, None, monkeypatch)

@@ -1,6 +1,22 @@
 """Connected components (large-star/small-star) unit tests."""
 
+from spinebasedrecordlinkage_jl_spark.operators import spine as spine_mod
 from spinebasedrecordlinkage_jl_spark.operators.spine import connected_components
+
+#: the edge-count constants that force each tier of connected_components
+TIERS = {
+    "single-task": {"_CC_SINGLE_TASK_EDGES": 10**9},
+    "star": {"_CC_SINGLE_TASK_EDGES": -1, "_CC_AUTO_STAR_EDGES": 10**9},
+    "checksum": {"_CC_SINGLE_TASK_EDGES": -1, "_CC_AUTO_STAR_EDGES": -1},
+}
+
+
+def _tier(df, monkeypatch, tier):
+    """connected_components(df) on a forced tier -> {id: component}."""
+    with monkeypatch.context() as m:
+        for name, value in TIERS[tier].items():
+            m.setattr(spine_mod, name, value)
+        return {r["id"]: r["component"] for r in connected_components(df).collect()}
 
 
 def _cc(spark, edges):
@@ -41,73 +57,30 @@ def test_empty_edges(spark):
     assert connected_components(df).count() == 0
 
 
-def test_both_convergence_rules_agree(spark):
+def test_both_convergence_rules_agree(spark, monkeypatch):
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 12)] + [(20, 21), (22, 21)], "src long, dst long"
     )
-    a = {r["id"]: r["component"] for r in connected_components(df, convergence="checksum").collect()}
-    b = {r["id"]: r["component"] for r in connected_components(df, convergence="star").collect()}
+    a = _tier(df, monkeypatch, "checksum")
+    b = _tier(df, monkeypatch, "star")
     assert a == b
     assert set(a.values()) == {1, 20}
 
 
-def test_star_rule_multi_root_src_counterexample(spark):
+def test_star_rule_multi_root_src_counterexample(spark, monkeypatch):
     """A weak star check (only 'no node is both src and dst') stops
     early on graphs where small_star leaves one src pointing at two
     roots — e.g. this input once assigned node 3 to components 1 AND 2.
     The strengthened check must keep contracting to one component."""
     for edges in ([(3, 2), (3, 4), (5, 1), (5, 4)], [(5, 3), (5, 1), (7, 3)]):
         df = spark.createDataFrame(edges, "src long, dst long")
-        star = {
-            r["id"]: r["component"]
-            for r in connected_components(df, convergence="star").collect()
-        }
-        checksum = {
-            r["id"]: r["component"]
-            for r in connected_components(df, convergence="checksum").collect()
-        }
+        star = _tier(df, monkeypatch, "star")
+        checksum = _tier(df, monkeypatch, "checksum")
         assert star == checksum
         nodes = {n for e in edges for n in e}
         assert set(star.keys()) == nodes
         # all edges connect transitively -> exactly one component, min id
         assert set(star.values()) == {min(nodes)}
-
-
-def test_node64_collision_remap(spark):
-    """_node64 keeps h1 for non-colliding nodes and deterministically
-    remaps nodes whose h1 is in the audited collision set."""
-    from pyspark.sql import functions as F
-
-    from spinebasedrecordlinkage_jl_spark.operators.spine import _node64, _node_hashes
-
-    df = spark.createDataFrame([(str(i),) for i in range(6)], "v string")
-    h1, h2 = _node_hashes("t", [F.col("v")])
-    rows = df.select("v", h1.alias("h1"), h2.alias("h2")).collect()
-    collide = frozenset([rows[0]["h1"], rows[3]["h1"]])
-    out = {
-        r["v"]: r["n"]
-        for r in df.select("v", _node64("t", [F.col("v")], collide).alias("n")).collect()
-    }
-    remapped = 0
-    for r in rows:
-        if r["h1"] in collide:
-            assert out[r["v"]] != r["h1"]
-            remapped += 1
-        else:
-            assert out[r["v"]] == r["h1"]
-    assert remapped == 2
-    # ids stay unique after the remap
-    assert len(set(out.values())) == 6
-
-
-def test_remapped_ids_reverified_against_population(spark):
-    """When the audit finds colliding h1 values, the remapped ids are
-    re-checked for uniqueness over the whole node population."""
-    from spinebasedrecordlinkage_jl_spark.operators.spine import _assert_ids_unique
-
-    # two distinct nodes sharing h1=1 (the collision), plus a bystander
-    pop = spark.createDataFrame([(1, 10), (1, 20), (2, 30)], "h1 long, h2 long")
-    _assert_ids_unique(pop, frozenset([1]))  # xxhash64(1,10) != xxhash64(1,20)
 
 
 def test_blocked_components_matches_global_cc(spark):
@@ -141,11 +114,11 @@ def test_blocked_components_matches_global_cc(spark):
     assert got == want
 
 
-def test_single_task_tier_matches_iterative(spark):
-    """r6: 'auto' routes measured-small graphs (<= SPINELINK_CC_SINGLE_
-    TASK_EDGES) through ONE single-task union-find stage; its output must
-    equal the iterative star AND checksum contractions on a graph mixing
-    deep chains, stars, duplicate/reversed edges, self-loops and random
+def test_single_task_tier_matches_iterative(spark, monkeypatch):
+    """r6: measured-small graphs (<= _CC_SINGLE_TASK_EDGES) run through
+    ONE single-task union-find stage; its output must equal the
+    iterative star AND checksum contractions on a graph mixing deep
+    chains, stars, duplicate/reversed edges, self-loops and random
     clutter."""
     import random
 
@@ -157,14 +130,8 @@ def test_single_task_tier_matches_iterative(spark):
         (1000 + rng.randint(0, 60), 1000 + rng.randint(0, 60)) for _ in range(120)
     ]
     df = spark.createDataFrame(edges, "src long, dst long")
-    auto = {r["id"]: r["component"] for r in connected_components(df).collect()}
-    star = {
-        r["id"]: r["component"]
-        for r in connected_components(df, convergence="star").collect()
-    }
-    checksum = {
-        r["id"]: r["component"]
-        for r in connected_components(df, convergence="checksum").collect()
-    }
-    assert auto == star == checksum
-    assert auto[39] == 1 and auto[514] == 500 and 41 not in auto
+    single = _tier(df, monkeypatch, "single-task")
+    star = _tier(df, monkeypatch, "star")
+    checksum = _tier(df, monkeypatch, "checksum")
+    assert single == star == checksum
+    assert single[39] == 1 and single[514] == 500 and 41 not in single

@@ -175,7 +175,6 @@ def test_write_config_round_trips(tmp_path):
                 approxmatch=(ApproxMatch("free_text", "free_text", "jarowinkler", 0.25),),
             ),
         ),
-        block_salt_buckets=4,
         broadcast_spine=False,
         checkpoint_dir=str(tmp_path / "ck"),
     )
